@@ -42,6 +42,7 @@ object Bench {
       .config("spark.sql.autoBroadcastJoinThreshold", (64L << 20).toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(GraftSession.localFileIo)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Generic session warmup (untimed): first-touch costs — parquet reader

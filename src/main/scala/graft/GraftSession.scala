@@ -10,6 +10,19 @@ import org.apache.spark.sql.SparkSession
   * caller scales to the cluster).
   */
 object GraftSession {
+
+  /** The `file:` filesystem classes of every graft session: Hadoop's
+    * checksummed local filesystem, minus the `chmod` process per written
+    * file (see [[graft.fs.NioRawLocalFileSystem]]). Hadoop caches
+    * `FileSystem` instances by scheme, authority and user, not by conf, so
+    * these take effect only if no `file:` FileSystem was built earlier in
+    * the JVM; the `FileContext` class is looked up on every call.
+    */
+  val localFileIo: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[fs.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[fs.NioLocalFs].getName
+  )
+
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -31,6 +44,7 @@ object GraftSession {
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
       )
       .config("spark.ui.enabled", "false")
+      .config(localFileIo)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -104,6 +104,12 @@ object LeaderBoardApp {
   /** Start both branches from an already-parsed streaming frame; returns the
     * running queries (caller stops them). Pane timing derives from the
     * previous/current watermark, tracked across batches.
+    *
+    * The two branches are separate streaming queries, and each one commits
+    * offsets on the shared source. A `MemoryStream` shared by both can
+    * therefore fail with `Offsets committed out of order` when one branch
+    * commits behind the other; give each branch its own source where that
+    * matters.
     */
   def start(
       parsed: DataFrame,

@@ -105,6 +105,10 @@ object WeightedMinhashSig {
   */
 case class WeightedMinhashExpr(child: Expression, tfCap: Int, numHashes: Int)
     extends UnaryExpression {
+  // checked here, where the values enter: tfCap > 9 breaks the single-digit
+  // salt table, numHashes < 1 yields an empty signature every band agrees on
+  require(tfCap >= 1 && tfCap <= 9, s"tfCap must be in [1, 9] (single-digit salt), got $tfCap")
+  require(numHashes >= 1, s"numHashes must be >= 1, got $numHashes")
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType.isInstanceOf[StringType]) TypeCheckResult.TypeCheckSuccess

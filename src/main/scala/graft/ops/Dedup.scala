@@ -1083,7 +1083,6 @@ object Dedup {
       minEstMatches: Int = 0
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    require(tfCap >= 1 && tfCap <= 9, "tfCap must be in [1, 9] (single-digit salt)")
     val r = numHashes / bands
     // ONE corpus pass: the tf-capped expansion, the 64-member affine
     // signature, and the distinct expanded-hash set all come out of one

@@ -2,6 +2,9 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +20,9 @@ class CheckpointRecoverySpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("running user totals survive a stop/restart with the same checkpoint") {
+  /** Stop/restart with one checkpoint; returns the checkpoint dir. */
+  private def userTotalsSurviveRestart(spark: SparkSession, tag: String): String = {
+    import spark.implicits._
     implicit val ctx = spark.sqlContext
     val checkpoint = Files.createTempDirectory("ckpt").toString
     val input = MemoryStream[(String, Int)]
@@ -30,23 +35,43 @@ class CheckpointRecoverySpec extends AnyFunSuite {
       .outputMode("complete")
       .start()
 
-    val q1 = start("ckpt_run1")
+    val q1 = start(s"${tag}_run1")
     try {
       input.addData(Seq("a" -> 5, "b" -> 3))
       q1.processAllAvailable()
-      val run1 = spark.table("ckpt_run1").as[(String, Long)].collect().toMap
+      val run1 = spark.table(s"${tag}_run1").as[(String, Long)].collect().toMap
       assert(run1 == Map("a" -> 5L, "b" -> 3L))
     } finally q1.stop()
 
     // Data added while the query is DOWN must be picked up on restart.
     input.addData(Seq("a" -> 7, "c" -> 2))
-    val q2 = start("ckpt_run2")
+    val q2 = start(s"${tag}_run2")
     try {
       q2.processAllAvailable()
-      val run2 = spark.table("ckpt_run2").as[(String, Long)].collect().toMap
+      val run2 = spark.table(s"${tag}_run2").as[(String, Long)].collect().toMap
       // state restored: a accumulates 5+7, b survives untouched, c is new
       assert(run2 == Map("a" -> 12L, "b" -> 3L, "c" -> 2L))
     } finally q2.stop()
+    checkpoint
+  }
+
+  test("running user totals survive a stop/restart with the same checkpoint") {
+    userTotalsSurviveRestart(spark, "ckpt")
+  }
+
+  test("running user totals survive a stop/restart on RocksDB state, GraftSession's provider") {
+    // the restarted run is a new query run id, so its state store loads
+    // from the snapshot zips the first run wrote through FileContext
+    val rocks = spark.newSession()
+    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val checkpoint = userTotalsSurviveRestart(rocks, "ckpt_rocks")
+    val files = Files.walk(java.nio.file.Paths.get(checkpoint, "state"))
+      .iterator().asScala.map(_.getFileName.toString).toSeq
+    val zips = files.filter(_.endsWith(".zip"))
+    assert(zips.nonEmpty, s"no RocksDB snapshot zips under $checkpoint/state")
+    // uploaded through the checksummed file layer: every zip has its .crc
+    assert(zips.forall(z => files.contains(s".$z.crc")), s"zips without .crc: $files")
   }
 
   test("upsert replay across a crash between sink write and checkpoint commit: no dupes, no loss") {

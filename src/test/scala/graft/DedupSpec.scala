@@ -525,6 +525,17 @@ class DedupSpec extends AnyFunSuite {
     }
   }
 
+  test("weighted MinHash kernel rejects tfCap outside [1, 9] and numHashes < 1 at construction") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import graft.functions.WeightedMinhashExpr
+    val text = Literal("a a a a a a a a a a b")
+    for ((cap, k) <- Seq((0, 64), (10, 64), (-1, 64), (8, 0), (8, -4)))
+      intercept[IllegalArgumentException](WeightedMinhashExpr(text, cap, k))
+    // the bounds themselves are valid
+    assert(WeightedMinhashExpr(text, 1, 1).eval() != null)
+    assert(WeightedMinhashExpr(text, 9, 64).eval() != null)
+  }
+
   test("dedup_savings_report: histogram and removable-token algebra on multi-copy clusters") {
     // clusters: "a b c" x3 (3 tokens/copy), "d e" x2 (2 tokens/copy),
     // "f" x1, "g h i j" x1 -> sizes {3:1, 2:1, 1:2}
